@@ -8,12 +8,17 @@ the scan), and (b) a bounded stream executes as >= 3 REAL micro-batches with
 operator state carried across batch boundaries. Oracles run on the original
 ``events`` view — the lake copy is value-identical by construction, so a
 hash match also certifies the materialization itself.
+
+The streaming queries run through the bounded-stream driver
+``sources.stream.run_bounded`` with a ``min_batches`` floor; the foreachBatch
+retraction chain passes its floor to ``sources.stream.drain``. The
+multi-batch claim is load-bearing, so a layout change that collapses the
+replay into fewer batches fails loudly instead of passing on weaker evidence.
 """
 
 from __future__ import annotations
 
 import time
-import uuid
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -26,7 +31,7 @@ from flink_1_6_0_spark.sources.partitioned import (
     partitioned_events_stream,
     read_partitioned_events,
 )
-from flink_1_6_0_spark.sources.stream import to_memory_sink
+from flink_1_6_0_spark.sources.stream import drain, run_bounded
 
 
 @query(
@@ -61,50 +66,6 @@ def events_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _run_stream(
-    df: DataFrame, mode: str, min_batches: int, sf_dir: str | None = None
-) -> tuple[DataFrame, list]:
-    """Drive a bounded stream to completion; return (result, progress).
-
-    Raises if fewer than ``min_batches`` micro-batches carried input rows —
-    the multi-batch claim is load-bearing (cross-batch state), so a layout
-    change that collapses the replay into one batch must fail loudly, not
-    silently pass on weaker evidence.
-
-    With ``sf_dir`` the query runs under a data-derived state partition
-    count (sources.stream.scaled_state_partitions — see _materialize in
-    queries/streaming.py for the r16/r17 commit-overhead evidence). The
-    events row count with ``min_batches`` epochs is the per-epoch volume
-    proxy; partition values are key-hashed so computed rows are unchanged.
-    """
-    import os as _os
-    from contextlib import nullcontext
-
-    from flink_1_6_0_spark.sources.stream import scaled_state_partitions
-
-    spark = df.sparkSession
-    name = f"q_{uuid.uuid4().hex[:12]}"
-    scope = (
-        scaled_state_partitions(
-            spark, _os.path.join(sf_dir, "events.parquet"), epochs=min_batches
-        )
-        if sf_dir
-        else nullcontext()
-    )
-    with scope:
-        q = to_memory_sink(df, name, mode)
-        try:
-            q.processAllAvailable()
-            progress = [p for p in q.recentProgress if p["numInputRows"] > 0]
-        finally:
-            q.stop()
-    if len(progress) < min_batches:
-        raise AssertionError(
-            f"expected >= {min_batches} non-empty micro-batches, got {len(progress)}"
-        )
-    return spark.table(name), progress
-
-
 @query(
     "stream_multibatch_tumble",
     oracle="""
@@ -131,8 +92,7 @@ def stream_multibatch_tumble(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sum_value")
     )
     out = agg.select(F.col("window.start").alias("ws"), "event_type", "n", "sum_value")
-    result, _ = _run_stream(out, "complete", min_batches=3, sf_dir=sf_dir)
-    return result
+    return run_bounded(out, "complete", sf_dir, min_batches=3)[0]
 
 
 @query(
@@ -147,8 +107,7 @@ def stream_multibatch_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     DISTINCT oracle would hash-mismatch. This is the driver-checkable proof
     that streaming state is cross-batch, not per-trigger."""
     stream = partitioned_events_stream(spark, sf_dir).select("user_id")
-    result, _ = _run_stream(stream.dropDuplicates(["user_id"]), "append", min_batches=3, sf_dir=sf_dir)
-    return result
+    return run_bounded(stream.dropDuplicates(["user_id"]), "append", sf_dir, min_batches=3)[0]
 
 
 @query(
@@ -207,8 +166,7 @@ def stream_multibatch_cep(spark: SparkSession, sf_dir: str) -> DataFrame:
         use_cleanup_timer=False,
         disorder_seconds=CEP_REPLAY_DISORDER_S,
     )
-    result, _ = _run_stream(out, "append", min_batches=4, sf_dir=sf_dir)
-    return result
+    return run_bounded(out, "append", sf_dir, min_batches=4)[0]
 
 
 @query(
@@ -276,8 +234,7 @@ def stream_multibatch_cep_timeout(spark: SparkSession, sf_dir: str) -> DataFrame
         disorder_seconds=CEP_REPLAY_DISORDER_S,
         with_timeouts=True,
     )
-    result, _ = _run_stream(out, "append", min_batches=4, sf_dir=sf_dir)
-    return result
+    return run_bounded(out, "append", sf_dir, min_batches=4)[0]
 
 
 @query(
@@ -330,8 +287,7 @@ def stream_multibatch_cep_iterative(spark: SparkSession, sf_dir: str) -> DataFra
         disorder_seconds=CEP_REPLAY_DISORDER_S,
         attr_cols=["value"],
     )
-    result, _ = _run_stream(out, "append", min_batches=4, sf_dir=sf_dir)
-    return result
+    return run_bounded(out, "append", sf_dir, min_batches=4)[0]
 
 
 @query(
@@ -382,8 +338,7 @@ def stream_multibatch_cep_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         select_fn=_funnel_select_fn,
         output_schema="view_id long, purchase_id long, value_delta double, dwell_sec long",
     )
-    result, _ = _run_stream(out, "append", min_batches=4, sf_dir=sf_dir)
-    return result
+    return run_bounded(out, "append", sf_dir, min_batches=4)[0]
 
 
 @query(
@@ -452,8 +407,7 @@ def stream_multibatch_cep_select_timeout(spark: SparkSession, sf_dir: str) -> Da
         timeout_fn=_funnel_timeout_fn,
         timeout_schema="view_id long, deadline_sec long",
     )
-    result, _ = _run_stream(out, "append", min_batches=4, sf_dir=sf_dir)
-    return result
+    return run_bounded(out, "append", sf_dir, min_batches=4)[0]
 
 
 @query(
@@ -517,7 +471,7 @@ def stream_multibatch_cep_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
         use_cleanup_timer=False,
         disorder_seconds=CEP_REPLAY_DISORDER_S,
     )
-    result, _ = _run_stream(out, "append", min_batches=4, sf_dir=sf_dir)
+    result, _ = run_bounded(out, "append", sf_dir, min_batches=4)
     return result.select(
         "user_id",
         "view_id",
@@ -574,8 +528,7 @@ def stream_cep_late_side(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         disorder_seconds=CEP_REPLAY_DISORDER_S,
     )
-    result, _ = _run_stream(out, "append", min_batches=2, sf_dir=sf_dir)
-    return result
+    return run_bounded(out, "append", sf_dir, min_batches=2)[0]
 
 
 def streaming_throughput(spark: SparkSession, sf_dir: str) -> dict:
@@ -589,7 +542,7 @@ def streaming_throughput(spark: SparkSession, sf_dir: str) -> dict:
         F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sum_value")
     )
     t0 = time.perf_counter()
-    _, progress = _run_stream(
+    _, progress = run_bounded(
         agg.select(F.col("window.start").alias("ws"), "event_type", "n", "sum_value"),
         "complete",
         min_batches=3,
@@ -648,13 +601,7 @@ def stream_multibatch_retract_chain(spark: SparkSession, sf_dir: str) -> DataFra
         .option("checkpointLocation", f"{work}/ckpt")
         .start()
     )
-    try:
-        q.processAllAvailable()
-        progress = [p for p in q.recentProgress if p["numInputRows"] > 0]
-    finally:
-        q.stop()
-    if len(progress) < 3:
-        raise AssertionError(f"expected >= 3 non-empty micro-batches, got {len(progress)}")
+    drain(q, min_batches=3)
     return spark.createDataFrame(final["rows"], "n_events long, n_users long")
 
 
@@ -707,5 +654,5 @@ def stream_cep_comparator(spark: SparkSession, sf_dir: str) -> DataFrame:
         disorder_seconds=CEP_REPLAY_DISORDER_S,
         comparator_cols=["value"],
     )
-    result, _ = _run_stream(out, "append", min_batches=4, sf_dir=sf_dir)
+    result, _ = run_bounded(out, "append", sf_dir, min_batches=4)
     return result.select("user_id", "view_id", "click_id")

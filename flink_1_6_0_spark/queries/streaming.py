@@ -2,59 +2,23 @@
 bench item 7).
 
 Each query runs a REAL Structured Streaming pipeline (file source replayed as
-a stream → stateful operator → memory sink, driven to completion with
-processAllAvailable) and returns the materialized result — so the DuckDB
-oracle checks the streaming operator's semantics end-to-end, not a batch
-stand-in.
+a stream → stateful operator → memory sink) through the bounded-stream driver
+``sources.stream.run_bounded`` and returns the materialized result — so the
+DuckDB oracle checks the streaming operator's semantics end-to-end, not a
+batch stand-in. The foreachBatch queries start their own query and finish it
+with ``sources.stream.drain``.
 """
 
 from __future__ import annotations
-
-import os
-import uuid
-from contextlib import nullcontext
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from flink_1_6_0_spark.registry import query
-from flink_1_6_0_spark.sources.stream import (
-    events_stream,
-    scaled_state_partitions,
-    to_memory_sink,
-)
+from flink_1_6_0_spark.sources.stream import drain, events_stream, run_bounded
 from flink_1_6_0_spark.streaming.dedup import dedup_stream
 from flink_1_6_0_spark.streaming.group_agg import continuous_group_agg
 from flink_1_6_0_spark.streaming.interval_join import stream_interval_join as interval_join_op
-
-
-def _materialize(
-    df: DataFrame, mode: str, sf_dir: str | None = None, table: str = "events"
-) -> DataFrame:
-    """Drive the bounded stream to completion through a memory sink.
-
-    With ``sf_dir`` the query runs under a DATA-DERIVED state partition
-    count (sources.stream.scaled_state_partitions): the r16 scaling block
-    showed CPUS-many state partitions hand a toy epoch two orders of
-    magnitude of per-store commit constants (stream_outer_join spent 217 s
-    cumulative commitTimeMs across 128 store instances on ~4k state rows).
-    Partition values are key-hashed, so the computed rows are unchanged —
-    only the state-store instance count and output order move (the oracle
-    normalizes order)."""
-    spark = df.sparkSession
-    name = f"q_{uuid.uuid4().hex[:12]}"
-    scope = (
-        scaled_state_partitions(spark, os.path.join(sf_dir, f"{table}.parquet"))
-        if sf_dir
-        else nullcontext()
-    )
-    with scope:
-        q = to_memory_sink(df, name, mode)
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.table(name)
 
 
 @query(
@@ -78,7 +42,7 @@ def stream_tumble_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sum_value")
     )
     out = agg.select(F.col("window.start").alias("ws"), "event_type", "n", "sum_value")
-    return _materialize(out, "complete", sf_dir)
+    return run_bounded(out, "complete", sf_dir)[0]
 
 
 @query(
@@ -97,7 +61,7 @@ def stream_continuous_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["event_type"],
         [F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sum_value")],
     )
-    return _materialize(agg, "complete", sf_dir)
+    return run_bounded(agg, "complete", sf_dir)[0]
 
 
 @query(
@@ -108,7 +72,7 @@ def stream_continuous_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_dedup_first_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming first-row-per-key dedup (keyed state; dropDuplicates)."""
     out = dedup_stream(events_stream(spark, sf_dir).select("user_id"), ["user_id"])
-    return _materialize(out, "append", sf_dir)
+    return run_bounded(out, "append", sf_dir)[0]
 
 
 @query(
@@ -142,7 +106,7 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         left_delay="1 minute",
         right_delay="1 minute",
     ).select(F.col("event_id").alias("click_id"), F.col("b_event_id").alias("purchase_id"))
-    return _materialize(joined, "append", sf_dir)
+    return run_bounded(joined, "append", sf_dir)[0]
 
 
 @query(
@@ -179,7 +143,7 @@ def stream_session_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = agg.select(
         "user_id", F.col("session_window.start").alias("session_start"), "n", "sum_value"
     )
-    return _materialize(out, "complete", sf_dir)
+    return run_bounded(out, "complete", sf_dir)[0]
 
 
 @query(
@@ -207,7 +171,7 @@ def stream_hop_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sum_value")
     )
     out = agg.select(F.col("window.start").alias("ws"), "event_type", "n", "sum_value")
-    return _materialize(out, "complete", sf_dir)
+    return run_bounded(out, "complete", sf_dir)[0]
 
 
 @query(
@@ -243,7 +207,7 @@ def stream_evicted_window_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = stream_evicted_window(
         stream, ["user_id"], "ts", "event_id", "value", 86400, keep_last_n=2
     )
-    return _materialize(out, "append", sf_dir)
+    return run_bounded(out, "append", sf_dir)[0]
 
 
 @query(
@@ -276,7 +240,7 @@ def stream_purging_trigger(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = stream_continuous_window(
         stream, ["user_id"], "ts", "value", 86400, 21600, purging=True
     )
-    return _materialize(out, "append", sf_dir)
+    return run_bounded(out, "append", sf_dir)[0]
 
 
 @query(
@@ -319,7 +283,7 @@ def stream_continuous_trigger(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = stream_continuous_window(
         stream, ["user_id"], "ts", "value", 86400, 21600, purging=False
     )
-    return _materialize(out, "append", sf_dir)
+    return run_bounded(out, "append", sf_dir)[0]
 
 
 @query(
@@ -369,7 +333,7 @@ def stream_session_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
         "sum_value",
     )
-    return _materialize(out, "append", sf_dir)
+    return run_bounded(out, "append", sf_dir)[0]
 
 
 @query(
@@ -395,7 +359,7 @@ def stream_over_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = stream_running_agg(
         events_stream(spark, sf_dir), ["user_id"], "ts", "event_id", "value"
     )
-    return _materialize(out, "append", sf_dir)
+    return run_bounded(out, "append", sf_dir)[0]
 
 
 @query(
@@ -440,7 +404,7 @@ def stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         F.col("event_id").alias("click_id"), F.col("b_event_id").alias("purchase_id")
     )
-    return _materialize(joined, "append", sf_dir)
+    return run_bounded(joined, "append", sf_dir)[0]
 
 
 @query(
@@ -465,7 +429,7 @@ def stream_distinct_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = events_stream(spark, sf_dir)
     agg = distinct_agg(ev, ["event_type"], "user_id", agg_alias="n_users")
-    return _materialize(agg, "complete", sf_dir)
+    return run_bounded(agg, "complete", sf_dir)[0]
 
 
 @query(
@@ -504,7 +468,7 @@ def stream_cep_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         use_cleanup_timer=False,
     )
-    return _materialize(out, "append", sf_dir)
+    return run_bounded(out, "append", sf_dir)[0]
 
 
 @query(
@@ -551,7 +515,7 @@ def stream_cep_value_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         use_cleanup_timer=False,
         attr_cols=["value"],
     )
-    return _materialize(out, "append", sf_dir)
+    return run_bounded(out, "append", sf_dir)[0]
 
 
 @query(
@@ -605,10 +569,7 @@ def stream_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         checkpoint=f"{state}/ckpt",
         direction="backward",
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(q)
     out = holder["last"]
     # final-state recompute with the deterministic (user_id, ts)-unique right
     # side: rebuild from the accumulated state tables (the emission above
@@ -665,7 +626,7 @@ def stream_quality_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("q") >= 0.5, 1).otherwise(0)).cast("long").alias("n_pass"),
         F.round(F.avg("q"), 4).alias("avg_quality"),
     )
-    return _materialize(agg, "complete", sf_dir, table="documents")
+    return run_bounded(agg, "complete", sf_dir, table="documents")[0]
 
 
 @query(
@@ -709,7 +670,7 @@ def stream_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = stream.select("doc_id", F.explode(word_shingles(F.col("text"), 3)).alias("s"))
     hits = sh.join(F.broadcast(bench), "s")
     agg = hits.groupBy("doc_id").agg(F.count("*").alias("n_contaminated"))
-    return _materialize(agg, "complete", sf_dir, table="documents")
+    return run_bounded(agg, "complete", sf_dir, table="documents")[0]
 
 
 # one shared spelling with the batch dedup_incremental oracle — the drained
@@ -758,10 +719,7 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = streaming_incremental_dedup(
         stream, "doc_id", "text", f"{work}/state", emit, f"{work}/ckpt"
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(q)
     return spark.read.parquet(f"{work}/flags")
 
 

@@ -14,12 +14,14 @@ Reference → Spark:
 - print()/debug sinks → format("console") / format("memory")
 
 Kafka/socket need live endpoints; tests drive the file and memory paths.
+Every bounded replay in the package runs to completion through one driver:
+:func:`run_bounded` (memory sink) over :func:`drain` (any started query).
 """
 
 from __future__ import annotations
 
 import os
-from contextlib import contextmanager
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -108,21 +110,6 @@ def stateful_shuffle_partitions(
     return max(1, min(cap, -(-per_epoch // _ROWS_PER_STATE_PARTITION)))
 
 
-@contextmanager
-def scaled_state_partitions(spark: SparkSession, path: str, epochs: int | None = None):
-    """Scope ``spark.sql.shuffle.partitions`` to a data-derived value for one
-    streaming query's lifetime (the conf is read at query START and fixes the
-    state-store partition count for that checkpoint). Restores the previous
-    value on exit; yields the chosen count."""
-    n = stateful_shuffle_partitions(spark, path, epochs)
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield n
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-
-
 def _time_ordered_per_trigger(spark: SparkSession, path: str) -> int:
     """maxFilesPerTrigger for a `_TIME_ORDERED`-stamped directory: at least
     3 epochs (multi-batch evidence), more when needed to keep each epoch
@@ -163,8 +150,8 @@ def _time_ordered_per_trigger(spark: SparkSession, path: str) -> int:
 
 def read_parquet_stream(spark: SparkSession, path: str, max_files_per_trigger: int = 1) -> DataFrame:
     """A parquet directory replayed as a stream (readFile watch-mode analog;
-    also the test harness for every windowed-agg/join query: bounded input
-    drives the stream to completion with processAllAvailable).
+    also the test harness for every windowed-agg/join query: run_bounded
+    drives the bounded input to completion).
 
     Hardens the session first: the schema probe below dies on
     TIMESTAMP(NANOS) parquet (events table) unless nanosAsLong is set — and
@@ -294,10 +281,64 @@ def kafka_sink(df: DataFrame, bootstrap: str, topic: str, checkpoint: str):
 
 
 def to_memory_sink(df: DataFrame, name: str, output_mode: str = "append"):
-    """Debug/test sink: run to completion synchronously, query via SQL.
-    Returns the StreamingQuery (caller stops it)."""
-    q = df.writeStream.outputMode(output_mode).format("memory").queryName(name).start()
-    return q
+    """Debug/test sink: start ``df`` into the in-memory table ``name``
+    (queryable via SQL). Returns the started StreamingQuery; the caller
+    drives and stops it (see :func:`drain`)."""
+    return df.writeStream.outputMode(output_mode).format("memory").queryName(name).start()
+
+
+def drain(query, min_batches: int = 1) -> list[dict]:
+    """Run a started bounded query until its source is exhausted, then stop
+    it. Returns the progress entries of the micro-batches that read input.
+
+    Raises when fewer than ``min_batches`` such batches ran: by default an
+    empty replay (a source that matched no files) fails instead of yielding
+    an empty result, and a caller whose claim is cross-batch state passes
+    its batch floor so a layout that collapses the replay fails too."""
+    try:
+        query.processAllAvailable()
+        progress = [p for p in query.recentProgress if p["numInputRows"] > 0]
+    finally:
+        query.stop()
+    if len(progress) < min_batches:
+        raise AssertionError(
+            f"expected >= {min_batches} non-empty micro-batches, got {len(progress)}"
+        )
+    return progress
+
+
+def run_bounded(
+    df: DataFrame,
+    mode: str,
+    sf_dir: str | None = None,
+    *,
+    table: str = "events",
+    min_batches: int = 1,
+) -> tuple[DataFrame, list[dict]]:
+    """The bounded-stream driver: run ``df`` through a memory sink with
+    :func:`drain`; return (the sink's table, the non-empty batches' progress).
+
+    With ``sf_dir`` the query starts under a data-derived state partition
+    count (:func:`stateful_shuffle_partitions` over ``sf_dir/<table>.parquet``;
+    the conf is read at query start and restored afterwards). A caller that
+    demands a multi-batch replay sizes epochs by its batch floor; otherwise
+    the source's own layout gives the epoch count. Partition values are
+    key-hashed, so the computed rows are unchanged — only the state-store
+    instance count and output order move."""
+    spark = df.sparkSession
+    name = f"q_{uuid.uuid4().hex[:12]}"
+    old = None
+    if sf_dir:
+        epochs = min_batches if min_batches > 1 else None
+        n = stateful_shuffle_partitions(spark, os.path.join(sf_dir, f"{table}.parquet"), epochs)
+        old = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    try:
+        progress = drain(to_memory_sink(df, name, mode), min_batches)
+    finally:
+        if old is not None:
+            spark.conf.set("spark.sql.shuffle.partitions", old)
+    return spark.table(name), progress
 
 
 def to_parquet_sink(df: DataFrame, path: str, checkpoint: str, output_mode: str = "append"):

@@ -77,34 +77,25 @@ def test_cep_next_strict_contiguity(spark):
 def test_cep_stream_matches_batch(spark, tmp_path):
     src = str(tmp_path / "cep_src")
     _events_df(spark).repartition(1).write.parquet(src)
-    from flink_1_6_0_spark.sources.stream import read_parquet_stream, to_memory_sink
+    from flink_1_6_0_spark.sources.stream import read_parquet_stream, run_bounded
 
     stream = read_parquet_stream(spark, src)
     out = cep_stream(
         stream, _funnel(3600), ["user_id"], "ts", "event_id", "event_type", use_cleanup_timer=False
     )
-    q = to_memory_sink(out, "cep_stream_out", "append")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = {tuple(r) for r in spark.sql("SELECT * FROM cep_stream_out").collect()}
+    got = {tuple(r) for r in run_bounded(out, "append")[0].collect()}
     assert got == {(1, 1, 2, 4)}
 
 
 def test_stream_running_agg(spark, sf_dir):
-    from flink_1_6_0_spark.sources.stream import events_stream, to_memory_sink
+    from flink_1_6_0_spark.sources.stream import events_stream, run_bounded
     from flink_1_6_0_spark.streaming.over_agg import stream_running_agg
 
     out = stream_running_agg(
         events_stream(spark, sf_dir), ["user_id"], "ts", "event_id", "value"
     )
-    q = to_memory_sink(out, "over_stream_out", "append")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = spark.sql("SELECT event_id, user_id, running_sum, running_n FROM over_stream_out").toPandas()
+    result, _ = run_bounded(out, "append")
+    got = result.select("event_id", "user_id", "running_sum", "running_n").toPandas()
 
     from flink_1_6_0_spark.queries import T
     from pyspark.sql import Window
@@ -1158,7 +1149,7 @@ def test_cep_pattern_facade_routes_batch_and_stream(spark, sf_dir):
     assert to["timed_out"].any() and (~to["timed_out"]).any()
 
     # streaming routing: missing type_col must be rejected loudly
-    from flink_1_6_0_spark.sources.stream import events_stream, to_memory_sink
+    from flink_1_6_0_spark.sources.stream import events_stream, run_bounded
 
     stream = events_stream(spark, sf_dir)
     with pytest.raises(ValueError, match="type_col"):
@@ -1169,12 +1160,7 @@ def test_cep_pattern_facade_routes_batch_and_stream(spark, sf_dir):
         use_cleanup_timer=False,
     ).select()
     assert out.isStreaming
-    q = to_memory_sink(out, "facade_cep_out", "append")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = spark.sql("SELECT * FROM facade_cep_out").toPandas()
+    got = run_bounded(out, "append")[0].toPandas()
     assert set(map(tuple, got[key].itertuples(index=False))) == set(
         map(tuple, direct[key].itertuples(index=False))
     )

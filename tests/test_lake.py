@@ -48,18 +48,10 @@ def test_lake_is_value_identical_to_source(spark, sf_dir):
 def test_stream_executes_as_multiple_microbatches(spark, sf_dir):
     """30 files at 10/trigger => exactly 3 non-empty micro-batches; the
     registered queries raise if the replay ever collapses to fewer."""
-    import uuid
-
-    from flink_1_6_0_spark.sources.stream import to_memory_sink
+    from flink_1_6_0_spark.sources.stream import run_bounded
 
     stream = partitioned_events_stream(spark, sf_dir)
-    name = f"mb_{uuid.uuid4().hex[:8]}"
-    q = to_memory_sink(stream.select("event_id"), name, "append")
-    try:
-        q.processAllAvailable()
-        progress = [p for p in q.recentProgress if p["numInputRows"] > 0]
-    finally:
-        q.stop()
+    _, progress = run_bounded(stream.select("event_id"), "append")
     assert len(progress) == 3, [p["numInputRows"] for p in progress]
 
 
@@ -136,15 +128,11 @@ def test_multibatch_cep_single_stateful_operator(spark, sf_dir):
     single groupBy exchange) — no second shuffle, no extra stateful stage.
     At 100 TB the NFA cost is one hash partition by key and per-key state,
     exactly the reference's keyed-operator shape."""
-    import uuid
-
-    import pyspark.sql.functions as F  # noqa: F811
-
     from flink_1_6_0_spark.sources.partitioned import (
         CEP_REPLAY_DISORDER_S,
         cep_funnel_stream,
     )
-    from flink_1_6_0_spark.sources.stream import to_memory_sink
+    from flink_1_6_0_spark.sources.stream import run_bounded
     from flink_1_6_0_spark.streaming.cep import Pattern, cep_stream
 
     pattern = (
@@ -164,13 +152,7 @@ def test_multibatch_cep_single_stateful_operator(spark, sf_dir):
     )
     logical = out._jdf.queryExecution().logical().toString()
     assert "flatMapGroupsInPandasWithState" in logical or "FlatMapGroupsInPandasWithState" in logical
-    q = to_memory_sink(out, f"cep_plan_{uuid.uuid4().hex[:8]}", "append")
-    try:
-        q.processAllAvailable()
-        progress = [p for p in q.recentProgress if p["numInputRows"] > 0]
-    finally:
-        q.stop()
-    assert progress, "stream never processed data"
+    _, progress = run_bounded(out, "append")  # raises if no batch read data
     for p in progress:
         ops = p["stateOperators"]
         assert len(ops) == 1, ops  # exactly one stateful operator
@@ -186,13 +168,11 @@ def test_multibatch_cep_rocksdb_state_store(spark, sf_dir):
     replay, run under RocksDBStateStoreProvider, must emit the identical
     match set, and the query progress must show RocksDB serving the stateful
     operator (rocksdb custom metrics present)."""
-    import uuid
-
     from flink_1_6_0_spark.sources.partitioned import (
         CEP_REPLAY_DISORDER_S,
         cep_funnel_stream,
     )
-    from flink_1_6_0_spark.sources.stream import to_memory_sink
+    from flink_1_6_0_spark.sources.stream import run_bounded
     from flink_1_6_0_spark.streaming.cep import Pattern, cep_stream
 
     def run():
@@ -211,18 +191,8 @@ def test_multibatch_cep_rocksdb_state_store(spark, sf_dir):
             use_cleanup_timer=False,
             disorder_seconds=CEP_REPLAY_DISORDER_S,
         )
-        name = f"cep_rocks_{uuid.uuid4().hex[:8]}"
-        q = to_memory_sink(out, name, "append")
-        try:
-            q.processAllAvailable()
-            progress = [p for p in q.recentProgress if p["numInputRows"] > 0]
-        finally:
-            q.stop()
-        rows = {
-            tuple(r)
-            for r in spark.sql(f"SELECT user_id, view_id, click_id FROM {name}").collect()
-        }
-        return rows, progress
+        result, progress = run_bounded(out, "append")
+        return {tuple(r) for r in result.select("user_id", "view_id", "click_id").collect()}, progress
 
     key = "spark.sql.streaming.stateStore.providerClass"
     default = spark.conf.get(key, None)
@@ -252,12 +222,12 @@ def test_cep_late_side_is_exactly_the_kernels_drop_set(spark, sf_dir, duck):
     derived drop set, and (b) the MAIN kernel's matches never reference a
     dropped event — the side output is the exact complement of what the
     kernel admitted."""
-    from flink_1_6_0_spark.queries.lake import _run_stream
     from flink_1_6_0_spark.registry import get
     from flink_1_6_0_spark.sources.partitioned import (
         CEP_REPLAY_DISORDER_S,
         cep_late_replay_stream,
     )
+    from flink_1_6_0_spark.sources.stream import run_bounded
     from flink_1_6_0_spark.streaming.cep import Pattern, cep_stream
 
     spec = get("stream_cep_late_side")
@@ -281,7 +251,7 @@ def test_cep_late_side_is_exactly_the_kernels_drop_set(spark, sf_dir, duck):
         use_cleanup_timer=False,
         disorder_seconds=CEP_REPLAY_DISORDER_S,
     )
-    matches, _ = _run_stream(main, "append", min_batches=2)
+    matches, _ = run_bounded(main, "append", min_batches=2)
     got = matches.toPandas()
     dropped = set(side["event_id"])
     used = set(got["view_id"]) | set(got["purchase_id"])

@@ -552,11 +552,9 @@ def test_time_ordered_directory_table_streams_multi_epoch(spark, sf_dir, tmp_pat
     windowed aggregate equal to the batch computation. Before this layout,
     directory tables drained in a single epoch, so multi-epoch watermark
     progression had no at-scale gate (r14 x10 finding #4)."""
-    import uuid
-
     from flink_1_6_0_spark.catalog import read_table
     from flink_1_6_0_spark.sources.scale_synth import _stamp_time_ordered
-    from flink_1_6_0_spark.sources.stream import events_stream, to_memory_sink
+    from flink_1_6_0_spark.sources.stream import events_stream, run_bounded
 
     d = str(tmp_path / "tier")
     os.makedirs(d)
@@ -574,23 +572,15 @@ def test_time_ordered_directory_table_streams_multi_epoch(spark, sf_dir, tmp_pat
     agg = stream.groupBy(F.window("ts", "1 hour"), "event_type").agg(
         F.count("*").alias("n")
     )
-    name = f"to_{uuid.uuid4().hex[:8]}"
-    q = to_memory_sink(agg, name, "complete")
-    try:
-        q.processAllAvailable()
-        progress = [p for p in q.recentProgress if p["numInputRows"] > 0]
-        # watermark must move strictly forward across epochs
-        wms = [
-            p["eventTime"]["watermark"]
-            for p in progress
-            if p.get("eventTime", {}).get("watermark", "1970-01-01T00:00:00.000Z")
-            > "1971"
-        ]
-    finally:
-        q.stop()
+    got, progress = run_bounded(agg, "complete")
     assert len(progress) == 3, [p["numInputRows"] for p in progress]
+    # watermark must move strictly forward across epochs
+    wms = [
+        p["eventTime"]["watermark"]
+        for p in progress
+        if p.get("eventTime", {}).get("watermark", "1970-01-01T00:00:00.000Z") > "1971"
+    ]
     assert wms == sorted(wms) and len(set(wms)) == len(wms), wms
-    got = spark.table(name)
     want = ev.groupBy(F.window("ts", "1 hour"), "event_type").agg(
         F.count("*").alias("n")
     )
@@ -604,7 +594,8 @@ def test_stateful_shuffle_partitions_derive_from_rows(spark, sf_dir, tmp_path):
     epoch two orders of magnitude of per-store commit constants."""
     from flink_1_6_0_spark.sources.stream import (
         _ROWS_PER_STATE_PARTITION,
-        scaled_state_partitions,
+        events_stream,
+        run_bounded,
         stateful_shuffle_partitions,
     )
 
@@ -623,10 +614,13 @@ def test_stateful_shuffle_partitions_derive_from_rows(spark, sf_dir, tmp_path):
     got = stateful_shuffle_partitions(spark, big, epochs=10)
     assert got == min(3, cap), got
 
-    # the context manager scopes the conf and restores it exactly
+    # the driver starts the query under the derived count and restores the
+    # conf exactly
     before = spark.conf.get("spark.sql.shuffle.partitions")
-    with scaled_state_partitions(spark, events) as n:
-        assert spark.conf.get("spark.sql.shuffle.partitions") == str(n)
+    agg = events_stream(spark, sf_dir).groupBy("event_type").count()
+    _, progress = run_bounded(agg, "complete", sf_dir)
+    n = stateful_shuffle_partitions(spark, events)
+    assert progress[-1]["stateOperators"][0]["numShufflePartitions"] == n
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
@@ -634,15 +628,9 @@ def test_scaled_state_partitions_preserve_stream_results(spark, sf_dir):
     """The data-derived state partition count must not change WHAT a
     stateful streaming query computes — only how many store instances
     carry it. Runs the tumbling aggregate both ways and compares rows."""
-    import uuid
-
     import pyspark.sql.functions as F
 
-    from flink_1_6_0_spark.sources.stream import (
-        events_stream,
-        scaled_state_partitions,
-        to_memory_sink,
-    )
+    from flink_1_6_0_spark.sources.stream import events_stream, run_bounded
 
     def run(scaled: bool):
         stream = events_stream(spark, sf_dir).withWatermark("ts", "1 minute")
@@ -652,18 +640,56 @@ def test_scaled_state_partitions_preserve_stream_results(spark, sf_dir):
         out = agg.select(
             F.col("window.start").alias("ws"), "event_type", "n", "sum_value"
         )
-        name = f"t_{uuid.uuid4().hex[:10]}"
-        if scaled:
-            with scaled_state_partitions(
-                spark, os.path.join(sf_dir, "events.parquet")
-            ):
-                q = to_memory_sink(out, name, "complete")
-                q.processAllAvailable()
-                q.stop()
-        else:
-            q = to_memory_sink(out, name, "complete")
-            q.processAllAvailable()
-            q.stop()
-        return sorted(map(tuple, spark.table(name).collect()))
+        got, _ = run_bounded(out, "complete", sf_dir if scaled else None)
+        return sorted(map(tuple, got.collect()))
 
     assert run(True) == run(False)
+
+
+def test_run_bounded_raises_below_min_batches(spark, sf_dir):
+    """The batch floor is enforced after cleanup: a single-epoch replay
+    asked for two non-empty batches raises, and leaves no query running and
+    the shuffle-partition conf as it found it."""
+    import pytest
+
+    from flink_1_6_0_spark.sources.stream import events_stream, run_bounded
+
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    # a sentinel the derived count (1 at test scale) cannot equal
+    spark.conf.set(key, "13")
+    try:
+        agg = events_stream(spark, sf_dir).groupBy("event_type").count()
+        with pytest.raises(AssertionError, match="expected >= 2 non-empty micro-batches, got 1"):
+            run_bounded(agg, "complete", sf_dir, min_batches=2)
+        assert spark.streams.active == []
+        assert spark.conf.get(key) == "13"
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_process_all_available_has_one_call_site():
+    """One bounded-stream driver: the only ``.processAllAvailable(`` call in
+    the package is sources.stream.drain (mentions in docstrings and comments
+    do not count)."""
+    import ast
+
+    import flink_1_6_0_spark
+
+    root = os.path.dirname(flink_1_6_0_spark.__file__)
+    sites = []
+    for dirpath, _, files in os.walk(root):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, f)
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            sites += [
+                os.path.relpath(path, root)
+                for node in ast.walk(tree)
+                if isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "processAllAvailable"
+            ]
+    assert sites == [os.path.join("sources", "stream.py")], sites

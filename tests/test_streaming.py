@@ -1,6 +1,7 @@
 """Streaming-core tests: bounded parquet replayed as a stream, run to
-completion with processAllAvailable, results compared against the identical
-batch computation (the reference's ITCase strategy, SURVEY.md §5 layer 4)."""
+completion (mostly through the bounded-stream driver, sources.stream.run_bounded),
+results compared against the identical batch computation (the reference's
+ITCase strategy, SURVEY.md §5 layer 4)."""
 
 from __future__ import annotations
 
@@ -9,19 +10,11 @@ import pytest
 
 from flink_1_6_0_spark.plans import retraction
 from flink_1_6_0_spark.queries import T
-from flink_1_6_0_spark.sources.stream import events_stream, to_memory_sink, to_parquet_sink
+from flink_1_6_0_spark.sources.stream import events_stream, run_bounded, to_parquet_sink
 from flink_1_6_0_spark.streaming.dedup import dedup_stream
 from flink_1_6_0_spark.streaming.group_agg import continuous_group_agg
 from flink_1_6_0_spark.streaming.interval_join import stream_interval_join
 from tests.helpers import normalize
-
-
-def _run_to_memory(df, name, mode):
-    q = to_memory_sink(df, name, mode)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
 
 
 def test_tumble_window_agg_stream_matches_batch(spark, sf_dir):
@@ -29,12 +22,10 @@ def test_tumble_window_agg_stream_matches_batch(spark, sf_dir):
     agg = stream.groupBy(F.window("ts", "1 hour"), "event_type").agg(
         F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sv")
     )
-    _run_to_memory(
-        agg.select(F.col("window.start").alias("ws"), "event_type", "n", "sv"),
-        "tumble_out",
-        "complete",
+    got, _ = run_bounded(
+        agg.select(F.col("window.start").alias("ws"), "event_type", "n", "sv"), "complete"
     )
-    got = spark.sql("SELECT * FROM tumble_out").toPandas()
+    got = got.toPandas()
 
     batch = (
         T(spark, sf_dir, "events")
@@ -50,16 +41,16 @@ def test_continuous_group_agg_update_mode(spark, sf_dir):
     stream = events_stream(spark, sf_dir)
     agg = continuous_group_agg(stream, ["event_type"], [F.count("*").alias("n")])
     assert retraction.infer_output_mode(agg, retraction.RETRACT) == "update"
-    _run_to_memory(agg, "grp_update", "update")
-    got = spark.sql("SELECT event_type, max(n) AS n FROM grp_update GROUP BY event_type").toPandas()
+    out, _ = run_bounded(agg, "update")
+    got = out.groupBy("event_type").agg(F.max("n").alias("n")).toPandas()
     batch = T(spark, sf_dir, "events").groupBy("event_type").agg(F.count("*").alias("n")).toPandas()
     assert normalize(got) == normalize(batch)
 
 
 def test_stream_dedup(spark, sf_dir):
     stream = events_stream(spark, sf_dir)
-    _run_to_memory(dedup_stream(stream.select("user_id"), ["user_id"]), "dedup_out", "append")
-    got = spark.sql("SELECT count(*) c FROM dedup_out").collect()[0]["c"]
+    out, _ = run_bounded(dedup_stream(stream.select("user_id"), ["user_id"]), "append")
+    got = out.count()
     expect = T(spark, sf_dir, "events").select("user_id").distinct().count()
     assert got == expect
 
@@ -81,8 +72,7 @@ def test_stream_interval_join_matches_batch(spark, sf_dir):
         left_delay="1 minute",
         right_delay="1 minute",
     ).select(F.col("event_id").alias("click_id"), F.col("b_event_id").alias("purchase_id"))
-    _run_to_memory(joined, "ij_out", "append")
-    got = spark.sql("SELECT * FROM ij_out").toPandas()
+    got = run_bounded(joined, "append")[0].toPandas()
 
     from flink_1_6_0_spark.registry import get
 
@@ -167,7 +157,6 @@ def test_bounded_outer_join_stream(spark, sf_dir):
     """Spark-native outer join with explicit bound (idle-state-retention
     analog): left outer click→purchase; unmatched clicks emit null-padded."""
     import pyspark.sql.functions as F
-    from flink_1_6_0_spark.sources.stream import events_stream, to_memory_sink
     from flink_1_6_0_spark.streaming.nonwindow_join import bounded_outer_join
 
     ev = events_stream(spark, sf_dir)
@@ -178,12 +167,8 @@ def test_bounded_outer_join_stream(spark, sf_dir):
     joined = bounded_outer_join(
         clicks, buys, [("user_id", "b_user_id")], "ts", "b_ts", bound="30 minutes"
     ).select("event_id", "b_event_id")
-    q = to_memory_sink(joined, "nwoj_out", "append")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = spark.sql("SELECT count(*) c, count(b_event_id) m FROM nwoj_out").collect()[0]
+    out, _ = run_bounded(joined, "append")
+    got = out.agg(F.count("*").alias("c"), F.count("b_event_id").alias("m")).collect()[0]
     # every click appears at least once; some have null purchase (outer padding)
     assert got["c"] >= got["m"] and got["c"] > 0
 
@@ -301,7 +286,7 @@ def test_state_backend_unknown_raises(spark):
 def test_stream_count_window(spark, tmp_path):
     import pyspark.sql.functions as F
 
-    from flink_1_6_0_spark.sources.stream import read_parquet_stream, to_memory_sink
+    from flink_1_6_0_spark.sources.stream import read_parquet_stream
     from flink_1_6_0_spark.streaming.count_window import stream_count_window
 
     # key 1: 5 events (values 1..5) → windows of 2: (1+2), (3+4), tail 5 buffered
@@ -315,12 +300,7 @@ def test_stream_count_window(spark, tmp_path):
     out = stream_count_window(
         read_parquet_stream(spark, src), ["user_id"], "ts", "event_id", "v", size=2
     )
-    q = to_memory_sink(out, "cw_out", "append")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = {tuple(r) for r in spark.sql("SELECT * FROM cw_out").collect()}
+    got = {tuple(r) for r in run_bounded(out, "append")[0].collect()}
     assert got == {(1, 0, 2, 3.0), (1, 1, 2, 7.0), (2, 0, 2, 30.0)}
 
 
@@ -361,7 +341,7 @@ def test_broadcast_state_rules_update_between_batches(spark, tmp_path):
 def test_stream_delta_window(spark, tmp_path):
     import pyspark.sql.functions as F
 
-    from flink_1_6_0_spark.sources.stream import read_parquet_stream, to_memory_sink
+    from flink_1_6_0_spark.sources.stream import read_parquet_stream
     from flink_1_6_0_spark.streaming.count_window import stream_delta_window
 
     # values 1.0, 1.1, 1.2, 2.5: |2.5-1.0| > 1.0 fires with the two buffered
@@ -374,12 +354,7 @@ def test_stream_delta_window(spark, tmp_path):
     out = stream_delta_window(
         read_parquet_stream(spark, src), ["user_id"], "ts", "event_id", "v", threshold=1.0
     )
-    q = to_memory_sink(out, "dw_out", "append")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = {tuple(r) for r in spark.sql("SELECT * FROM dw_out").collect()}
+    got = {tuple(r) for r in run_bounded(out, "append")[0].collect()}
     assert got == {(1, 4, 2, 2.3)}
 
 
@@ -390,7 +365,7 @@ def test_stream_evicted_window_count_and_time(spark, tmp_path):
     the max-ts sentinel never fires (watermark never passes its end)."""
     import pyspark.sql.functions as F
 
-    from flink_1_6_0_spark.sources.stream import read_parquet_stream, to_memory_sink
+    from flink_1_6_0_spark.sources.stream import read_parquet_stream
     from flink_1_6_0_spark.streaming.evictors import stream_evicted_window
 
     # key 1 window [0,600): 6 events vals 1..6 → CountEvictor(3) keeps 4,5,6
@@ -412,28 +387,18 @@ def test_stream_evicted_window_count_and_time(spark, tmp_path):
     out_count = stream_evicted_window(
         stream, ["user_id"], "ts", "event_id", "v", 600, keep_last_n=3
     )
-    q = to_memory_sink(out_count, "ev_count", "append")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     got = {
         (r["user_id"], int(r["w_start"].timestamp()), r["n_kept"], r["sum_kept"])
-        for r in spark.sql("SELECT * FROM ev_count").collect()
+        for r in run_bounded(out_count, "append")[0].collect()
     }
     assert got == {(1, 0, 3, 15.0), (1, 600, 1, 50.0), (2, 0, 3, 7.0)}
 
     out_time = stream_evicted_window(
         stream, ["user_id"], "ts", "event_id", "v", 600, keep_last_seconds=60
     )
-    q = to_memory_sink(out_time, "ev_time", "append")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     got = {
         (r["user_id"], int(r["w_start"].timestamp()), r["n_kept"], r["sum_kept"])
-        for r in spark.sql("SELECT * FROM ev_time").collect()
+        for r in run_bounded(out_time, "append")[0].collect()
     }
     # key 2: newest 160, horizon 100 — the ts=100 element is EVICTED (strict >)
     assert (2, 0, 2, 6.0) in got
@@ -448,7 +413,7 @@ def test_stream_continuous_and_purging_trigger(spark, tmp_path):
     end; the sentinel's own window never fires."""
     import pyspark.sql.functions as F
 
-    from flink_1_6_0_spark.sources.stream import read_parquet_stream, to_memory_sink
+    from flink_1_6_0_spark.sources.stream import read_parquet_stream
     from flink_1_6_0_spark.streaming.triggers import stream_continuous_window
 
     rows = [
@@ -462,27 +427,22 @@ def test_stream_continuous_and_purging_trigger(spark, tmp_path):
     df.repartition(1).write.parquet(src)
     stream = read_parquet_stream(spark, src).withWatermark("ts", "0 seconds")
 
-    def run(purging, name):
+    def run(purging):
         out = stream_continuous_window(
             stream, ["user_id"], "ts", "v", 600, 200, purging=purging
         )
-        q = to_memory_sink(out, name, "append")
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
         return {
             (r["user_id"], int(r["w_start"].timestamp()), int(r["fire_ts"].timestamp()),
              r["n"], r["sum_v"])
-            for r in spark.sql(f"SELECT * FROM {name}").collect()
+            for r in run_bounded(out, "append")[0].collect()
         }
 
-    got = run(False, "ct_cont")
+    got = run(False)
     assert got == {
         (1, 0, 200, 2, 3.0), (1, 0, 400, 3, 7.0), (1, 0, 600, 4, 15.0),
         (2, 0, 200, 1, 10.0), (2, 0, 400, 1, 10.0), (2, 0, 600, 2, 30.0),
     }
-    got = run(True, "ct_purge")
+    got = run(True)
     assert got == {
         (1, 0, 200, 2, 3.0), (1, 0, 400, 1, 4.0), (1, 0, 600, 1, 8.0),
         (2, 0, 200, 1, 10.0), (2, 0, 600, 1, 20.0),
@@ -503,7 +463,7 @@ def test_continuous_trigger_straggler_across_batches(spark, tmp_path):
     Spark's late filter.)"""
     import pyspark.sql.functions as F
 
-    from flink_1_6_0_spark.sources.stream import read_parquet_stream, to_memory_sink
+    from flink_1_6_0_spark.sources.stream import read_parquet_stream
     from flink_1_6_0_spark.streaming.triggers import stream_continuous_window
 
     batches = [
@@ -519,31 +479,26 @@ def test_continuous_trigger_straggler_across_batches(spark, tmp_path):
             "ts", F.timestamp_seconds(F.col("sec"))
         ).drop("sec").repartition(1).write.mode("append").parquet(src)
 
-    def run(purging, name):
+    def run(purging):
         stream = read_parquet_stream(spark, src).withWatermark("ts", "0 seconds")
         out = stream_continuous_window(stream, ["user_id"], "ts", "v", 600, 200, purging=purging)
-        q = to_memory_sink(out, name, "append")
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
         return {
             (r["user_id"], int(r["w_start"].timestamp()), int(r["fire_ts"].timestamp()),
              r["n"], r["sum_v"])
-            for r in spark.sql(f"SELECT * FROM {name}").collect()
+            for r in run_bounded(out, "append")[0].collect()
         }
 
     # purging: the late straggler is dropped by the watermark filter — no
     # phantom row at its passed boundary 200, and the 600 delta holds only
     # the on-time 450+550 rows
-    assert run(True, "strag_p") == {
+    assert run(True) == {
         (1, 0, 200, 1, 2.0),
         (1, 0, 600, 2, 10.0),
         (9, 4800, 5200, 1, 0.0),
     }
     # accumulating: no duplicate (w, 200) row; cumulative panes contain only
     # on-time elements
-    assert run(False, "strag_c") == {
+    assert run(False) == {
         (1, 0, 200, 1, 2.0),
         (1, 0, 400, 1, 2.0),
         (1, 0, 600, 3, 12.0),
@@ -589,7 +544,7 @@ def test_evictor_and_trigger_multibatch_invariance(spark, tmp_path):
     windows firing progressively) yields exactly the single-batch result."""
     import pyspark.sql.functions as F
 
-    from flink_1_6_0_spark.sources.stream import read_parquet_stream, to_memory_sink
+    from flink_1_6_0_spark.sources.stream import read_parquet_stream
     from flink_1_6_0_spark.streaming.evictors import stream_evicted_window
     from flink_1_6_0_spark.streaming.triggers import stream_continuous_window
 
@@ -607,27 +562,22 @@ def test_evictor_and_trigger_multibatch_invariance(spark, tmp_path):
     single = str(tmp_path / "sb_src")
     spark.read.parquet(multi).repartition(1).write.parquet(single)
 
-    def run(op, src, name):
+    def run(op, src):
         stream = read_parquet_stream(spark, src).withWatermark("ts", "0 seconds")
-        q = to_memory_sink(op(stream), name, "append")
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return {tuple(r) for r in spark.sql(f"SELECT * FROM {name}").collect()}
+        return {tuple(r) for r in run_bounded(op(stream), "append")[0].collect()}
 
     # evictor needs an id col — synthesize a deterministic one from the value
     ev = lambda s: stream_evicted_window(
         s.withColumn("event_id", (F.col("v") * 10).cast("long")),
         ["user_id"], "ts", "event_id", "v", 600, keep_last_n=2,
     )
-    assert run(ev, multi, "mb_ev") == run(ev, single, "sb_ev")
+    assert run(ev, multi) == run(ev, single)
 
     tr = lambda s: stream_continuous_window(s, ["user_id"], "ts", "v", 600, 200, purging=True)
-    assert run(tr, multi, "mb_tr") == run(tr, single, "sb_tr")
+    assert run(tr, multi) == run(tr, single)
 
     tc = lambda s: stream_continuous_window(s, ["user_id"], "ts", "v", 600, 200, purging=False)
-    assert run(tc, multi, "mb_tc") == run(tc, single, "sb_tc")
+    assert run(tc, multi) == run(tc, single)
 
 
 def test_parquet_sink_checkpoint_recovery_no_duplicates(spark, tmp_path):
@@ -1470,7 +1420,7 @@ def test_cep_stream_attrs_survive_batch_boundary(spark, tmp_path):
     the buffered attributes were serialized and restored."""
     import pyspark.sql.functions as F
 
-    from flink_1_6_0_spark.sources.stream import read_parquet_stream, to_memory_sink
+    from flink_1_6_0_spark.sources.stream import read_parquet_stream
     from flink_1_6_0_spark.streaming.cep import Pattern, cep_stream
 
     src = str(tmp_path / "cep_attr_src")
@@ -1501,15 +1451,7 @@ def test_cep_stream_attrs_survive_batch_boundary(spark, tmp_path):
         attr_cols=["value"],
         eager=True,  # batches arrive in event-time order by construction
     )
-    q = to_memory_sink(out, "cep_attr_out", "append")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = {
-        (r["user_id"], r["a_id"], r["b_id"])
-        for r in spark.sql("SELECT * FROM cep_attr_out").collect()
-    }
+    got = {(r["user_id"], r["a_id"], r["b_id"]) for r in run_bounded(out, "append")[0].collect()}
     # first-match must SKIP the low-value b@200 and take b@300 — possible
     # only if both a's and b's attributes crossed the batch boundary intact
     assert got == {(1, 10, 12)}
