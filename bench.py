@@ -1,47 +1,47 @@
-"""Benchmark harness — runs the headline (bench=True) registered queries.
+"""Benchmark harness: times the headline (bench=True) registered queries.
 
 Usage: python bench.py
-Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
-       SPARK_GRAFT_CPUS   (default: all cores)
-       SPARK_GRAFT_BENCH_RUNS (default 3 — median-of-N per query)
+Env:   SPARK_GRAFT_SF_DIR     sweep input directory (default testdata/sf0.1)
+       SPARK_GRAFT_BENCH_RUNS timed runs per query, median kept (default 3)
+       SPARK_GRAFT_SF1        0 skips the two sf1 scale blocks, which run only
+                              when the sweep is at sf0.1 (default 1)
+The session's core count comes from SPARK_GRAFT_CPUS (see session.py).
 
-Prints ONE JSON line: {"metric": ..., "value": N, "unit": "sec",
-"queries": {name: sec, ...}, "sf": ..., "vs_baseline_matched": R, ...}.
+Prints ONE compact JSON line (COMPACT_KEYS; callers may keep only the tail of
+stdout) and writes the full record to BENCH_DETAIL.json. Every query runs to
+completion into a `noop` sink: the whole plan executes, nothing is collected.
 
-Each query is executed to completion with a `noop` sink write — full plan
-runs, nothing is collected to the driver (the 100 TB-honest way to measure).
-Per-query time is the MEDIAN of N runs (single runs at sub-second scale showed
-±2x jitter across rounds — r3's window_tumble "regression" was irreproducible).
+Order: an untimed warm-up pass at sf0.001 (first-run codegen is not
+measured), the main sweep, the sf1 block (10x key-shifted scale-up of sf0.1),
+the dbgen block (real TPC-H sf1), then micro-batch throughput.
+`vs_baseline_matched` is sum(current)/sum(baseline) over the queries present
+in both the sweep and BENCHBASE.json, so adding or dropping a bench query
+never skews it.
 
-Self-comparability (round-3 ADVICE): per-query recorded baselines live in
-BENCHBASE.json; `vs_baseline_matched` is sum(current)/sum(baseline) over the
-queries present in BOTH — so adding or dropping a bench query never skews the
-headline ratio, and no judge recomputes matched-set arithmetic by hand.
+Noise rule: right after its timed runs, each query takes a paired stamp of
+the sentinel, a fixed data-independent job whose speed tracks the machine,
+not the engine (see _stamp). drift = paired stamp / BENCHBASE
+`sentinel_sec`; a query is contaminated iff drift > DRIFT, and a scale block
+iff its worst query is. Nothing is re-run. `env.sentinel_sec` is the median
+of the sweep's paired stamps, so `env_drift` and `vs_baseline_normalized`
+divide by the machine speed seen during the sweep. Without a BENCHBASE
+sentinel the rule is off (`guard_active: false`, `contaminated: null`). A
+stamp sees load that persists past the runs it follows, not a burst that
+ends before it.
 
-Environment fingerprint (round-6 verdict: r6's run came out a uniform ~1.4x
-of r4's on UNCHANGED code — machine-level drift that the raw ratio could not
-distinguish from a plan regression): every run now records an `env` block
-(Spark/JVM/Python versions, CPU count, loadavg before/after) plus a
-fixed-cost SENTINEL — since r12 a 32-task shuffle+agg microjob (see
-`_sentinel_sec` for why the old single-stage range-sum misread contention),
-a data-independent job whose speed tracks the machine, not the engine.
-BENCHBASE.json carries the re-seeded sentinel regime;
-`vs_baseline_normalized` divides the raw matched ratio by
-(sentinel_now / sentinel_base), so environment drift cancels and what
-remains is plan-level change.
-
-Mid-sweep contamination guard (round-15, after three driver sweeps in a row
-landed on a loaded machine and r14's shipped 1.451 needed a judge re-run to
-adjudicate): every query and scale block now carries a sentinel stamp taken
-DURING the sweep; drifted queries are re-run behind a settle barrier, and a
-run that never lands calm ships `"contaminated": true` plus the drifted list
-— the output is self-adjudicating either way.
+Deadline: the line is printed before DEADLINE_S seconds from the start of
+main(). A unit (one warm-up, one timed query, one scale block's input
+build) starts only while at least RESERVE_S remain. A skipped sweep query is
+listed in `contaminated_list` under its name, a scale block missing any of
+its queries as `sf1_block` / `sf1_dbgen_block`, skipped throughput as
+`throughput`; any entry sets `contaminated: true`.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import platform
 import re
 import statistics
 import sys
@@ -50,51 +50,97 @@ import time
 from flink_1_6_0_spark.registry import load_all
 from flink_1_6_0_spark.session import get_spark
 
-BENCHBASE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCHBASE.json")
+_ROOT = os.path.dirname(os.path.abspath(__file__))
+BENCHBASE = os.path.join(_ROOT, "BENCHBASE.json")
+DETAIL = os.path.join(_ROOT, "BENCH_DETAIL.json")
+
+DEADLINE_S = 1080.0
+# About 3x the longest single unit, so a unit started just inside the
+# reserve still ends before DEADLINE_S. On a 4-vCPU host beside 4 busy-loop
+# processes, at SPARK_GRAFT_CPUS=4, the longest were the cold build of the
+# sf1 input (32 s; the dbgen build took 29 s), dedup_semantic_ml's 3 runs
+# and stamp (~30 s) and dedup_minhash_lsh's sf1 warm-up, 2 runs and stamp
+# (~26 s).
+RESERVE_S = 90.0
+DRIFT = 1.3
+
+SF1_SET = (
+    "tpch_q1", "tpch_q3", "tpch_q9", "tpch_q21",
+    "dedup_minhash_lsh", "corpus_e2e_pretrain",
+    "graph_triadic_census_directed",
+)
+DBGEN_SET = ("tpch_q1", "tpch_q3", "tpch_q9", "tpch_q21")
+COMPACT_KEYS = (
+    "metric", "value", "unit", "queries", "sf", "runs_per_query",
+    "vs_baseline_matched", "matched_queries", "env_drift",
+    "vs_baseline_normalized", "throughput_rows_s", "stream_batches",
+    "guard_active", "contaminated", "contaminated_list",
+)  # then `sentinel_sec`, the `sf1` / `sf1_dbgen` summaries and `detail`
 
 
 def _consume(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def _sentinel_sec(spark, runs: int = 3) -> float:
-    """Median wall time of a fixed, data-independent 32-task SHUFFLE+AGG job
-    — the machine-speed proxy the normalized ratio divides by.
+def _sentinel_sec(spark) -> float:
+    """Wall time of a fixed, data-independent 32-task shuffle+agg job.
 
-    r12 redesign (r11 verdict task 4): the old sentinel was a single-stage
-    ``range(2e8).sum()`` — CPU-only whole-stage codegen, one task chain, no
-    exchange. On a loaded machine (r11: loadavg 7.7) it read 0.084 s — i.e.
-    it got a free core and saw NO contention — while every real query (32
-    parallel tasks + shuffles) slowed ~40%; env_drift came out 0.452 and the
-    normalized headline 1.623 against a raw matched ratio of 0.733. The
-    sentinel must exercise the SAME resources the queries contend for:
-    this one runs 32 parallel map tasks, a hash partial aggregate, one
-    shuffle exchange and a final aggregate — the dominant plan shape of the
-    bench head. BENCHBASE.json's ``sentinel_sec`` was re-seeded for this
-    job (``_sentinel_note`` there records the artifact)."""
+    It runs 32 parallel map tasks, a partial aggregate, one exchange and a
+    final aggregate, the dominant plan shape of the bench head, so it
+    contends for the same resources as the queries: a single-stage CPU-only
+    sentinel grabbed a free core and read fast on a loaded machine while the
+    32-task queries slowed ~40%."""
+    t0 = time.perf_counter()
+    _consume(
+        spark.range(0, 12_000_000, 1, 32)
+        .selectExpr("id % 100000 AS k", "id AS v")
+        .groupBy("k")
+        .agg({"v": "sum"})
+    )
+    return round(time.perf_counter() - t0, 3)
+
+
+def _stamp(spark) -> float:
+    """The machine speed paired with a timed query: the faster of two 1-run
+    sentinels back to back. A heavy query leaves a GC/allocator tail that
+    slows the next job and drains within seconds (after the sf1 block on an
+    idle 32-core host a lone run read 1.657 s, and 0.535 s once settled);
+    the first run absorbs it, while load from other processes slows both."""
+    return min(_sentinel_sec(spark), _sentinel_sec(spark))
+
+
+def _warm(spark, spec, sf_dir: str) -> None:
+    try:
+        _consume(spec.fn(spark, sf_dir))
+    except Exception:
+        pass  # a failing query is reported by its timed runs
+
+
+def _time_query(spark, spec, sf_dir: str, runs: int) -> tuple[float, float]:
+    """Median wall time of `runs` runs of one query (-1.0 if it fails), and
+    the stamp paired with it, taken right after in the same process."""
     samples = []
-    for _ in range(runs):
-        t0 = time.perf_counter()
-        (
-            spark.range(0, 12_000_000, 1, 32)
-            .selectExpr("id % 100000 AS k", "id AS v")
-            .groupBy("k")
-            .agg({"v": "sum"})
-            .write.format("noop")
-            .mode("overwrite")
-            .save()
-        )
-        samples.append(time.perf_counter() - t0)
-    return round(statistics.median(samples), 3)
+    try:
+        for _ in range(runs):
+            t0 = time.perf_counter()
+            _consume(spec.fn(spark, sf_dir))
+            samples.append(time.perf_counter() - t0)
+        t = round(statistics.median(samples), 3)
+    except Exception as exc:  # a failing query must not sink the bench
+        print(f"bench: {spec.name} FAILED: {exc}", file=sys.stderr)
+        t = -1.0
+    return t, _stamp(spark)
+
+
+def _loadavg() -> list[float]:
+    try:
+        return [round(x, 2) for x in os.getloadavg()]
+    except OSError:
+        return [-1.0, -1.0, -1.0]
 
 
 def _env_block(spark) -> dict:
-    import platform
-
-    try:
-        load = os.getloadavg()
-    except OSError:
-        load = (-1.0, -1.0, -1.0)
+    """What a timed section ran on: versions, core count, load at its start."""
     return {
         "spark_version": spark.version,
         "java_version": str(
@@ -102,400 +148,191 @@ def _env_block(spark) -> dict:
         ),
         "python_version": platform.python_version(),
         "cpus": os.cpu_count(),
-        "loadavg_start": [round(x, 2) for x in load],
+        "loadavg_start": _loadavg(),
     }
 
 
-def _settle(spark, base_sentinel: float | None, limit_sec: float = 180.0) -> None:
-    """Wait for the machine to return to the baseline speed regime before a
-    timed block starts (r14: the 36-query warm-up pass leaves GC/load
-    pressure that inflated whatever ran next — the scale blocks read
-    block-sentinels of 1.3-1.4x however they were ordered). Polls the 1-run
-    sentinel until it reads <= 1.25x the recorded regime or the time budget
-    runs out — on this dedicated box the pressure drains in well under a
-    minute; on a genuinely busy machine the budget caps the wait and the
-    block's env stamp still records what it ran under."""
-    if not base_sentinel:
-        return
-    deadline = time.monotonic() + limit_sec
-    while time.monotonic() < deadline:
-        if _sentinel_sec(spark, runs=1) <= 1.25 * base_sentinel:
-            return
-        time.sleep(15)
+def _verdict(sentinels: dict[str, float], cut: list[str], base: float | None) -> dict:
+    """The noise rule: a unit is contaminated iff its paired stamp drifts
+    past DRIFT x the BENCHBASE regime `base`; a cut unit always is."""
+    listed = [u for u, s in sentinels.items() if base and s / base > DRIFT]
+    listed += [u for u in cut if u not in listed]
+    if listed:
+        contaminated = True
+    else:
+        contaminated = None if base is None else False
+    out = {"guard_active": base is not None, "contaminated": contaminated}
+    if listed:
+        out["contaminated_list"] = listed
+    return out
 
 
-def _mini_env(spark) -> dict:
-    """Per-block environment stamp (r12 verdict item 7: the sf1/sf1_dbgen
-    blocks carried no env snapshot, so their run-to-run variance got
-    re-litigated from prose every round): loadavg at block start plus a
-    single-run sentinel reading for the machine-speed regime."""
-    try:
-        load = [round(x, 2) for x in os.getloadavg()]
-    except OSError:
-        load = [-1.0, -1.0, -1.0]
-    return {"loadavg": load, "sentinel_sec": _sentinel_sec(spark, runs=1)}
+def _compact_line(out: dict) -> str:
+    """The one stdout line: the COMPACT_KEYS present in `out`, trimmed to fit
+    in the ~2000-char tail of stdout that callers keep."""
+    compact = {k: out[k] for k in COMPACT_KEYS if k in out}
+    compact["sentinel_sec"] = out["env"]["sentinel_sec"]
+    for blk in ("sf1", "sf1_dbgen"):
+        if blk in out:
+            compact[blk] = {
+                k: out[blk][k] for k in ("sf", "vs_baseline_matched") if k in out[blk]
+            }
+    compact["detail"] = os.path.basename(DETAIL)
+    line = json.dumps(compact, separators=(",", ":"))
+    if len(line) > 1900:  # too big: coarsen, then trim the list, then queries
+        compact["queries"] = {q: round(t, 2) for q, t in compact["queries"].items()}
+        line = json.dumps(compact, separators=(",", ":"))
+    listed = compact.get("contaminated_list", [])
+    while len(line) > 1900 and compact.get("contaminated_list"):
+        # runs are gated on `queries`; the full list is in the detail file
+        compact["contaminated_list"] = compact["contaminated_list"][:-1]
+        compact["contaminated_omitted"] = len(listed) - len(compact["contaminated_list"])
+        line = json.dumps(compact, separators=(",", ":"))
+    while len(line) > 1900 and compact["queries"]:
+        # drop the fastest queries first — their timings matter least and the
+        # full set is in BENCH_DETAIL.json either way
+        drop = min(compact["queries"], key=lambda q: compact["queries"][q])
+        del compact["queries"][drop]
+        compact["queries_truncated"] = True
+        line = json.dumps(compact, separators=(",", ":"))
+    return line
 
 
 def main() -> None:
+    end = time.monotonic() + DEADLINE_S
+    cut: list[str] = []
+
+    def fits(unit: str) -> bool:
+        """The deadline check: a unit starts only while RESERVE_S remain."""
+        if end - time.monotonic() >= RESERVE_S:
+            return True
+        if unit not in cut:
+            cut.append(unit)
+        return False
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else -1.0
+    try:
+        with open(BENCHBASE) as fh:
+            base = json.load(fh)
+    except (OSError, ValueError):
+        base = {}
+    base_sentinel = base.get("sentinel_sec") or None
 
     spark = get_spark(app_name="flink-1.6.0-spark-bench")
     specs = [s for s in load_all().values() if s.bench]
+    by_name = {s.name: s for s in specs}
+    env = _env_block(spark)
 
-    # Warm-up pass at the smallest SF: compiles every query's codegen/plan once
-    # so the timed runs measure steady-state execution, not first-run JIT.
-    # (Expression-heavy queries pay multi-second one-time compilation that a
-    # long-running cluster amortizes to zero — see SCALING.md.)
     warm_dir = "/root/testdata/sf0.001"
     for spec in specs:
-        try:
-            _consume(spec.fn(spark, warm_dir if os.path.isdir(warm_dir) else sf_dir))
-        except Exception:
-            pass
+        if fits(spec.name):
+            _warm(spark, spec, warm_dir if os.path.isdir(warm_dir) else sf_dir)
+    if not cut:
+        _sentinel_sec(spark)  # untimed: the sentinel job's own first run
 
-    # Scale blocks run FIRST (r13 verdict task 3): when they ran last — after
-    # 35 queries × 3 runs of synthesis/GC pressure — their block sentinels
-    # read 1.3–1.4× the baseline regime while the main sweep's read ~1.1,
-    # so sf1 numbers arrived structurally noisy every round. Generation is
-    # cache-hit after the first round; the main sweep below still has its
-    # own min-sentinel retry, so ordering costs it nothing.
-    sf1_block: dict | None = None
-    dbgen_block: dict | None = None
-    sf1_set = (
-        "tpch_q1", "tpch_q3", "tpch_q9", "tpch_q21",
-        "dedup_minhash_lsh", "corpus_e2e_pretrain",
-        "graph_triadic_census_directed",
+    timings: dict[str, float] = {}
+    sentinels: dict[str, float] = {}
+    for spec in specs:
+        if fits(spec.name):
+            timings[spec.name], sentinels[spec.name] = _time_query(
+                spark, spec, sf_dir, runs
+            )
+    env["sentinel_sec"] = (
+        round(statistics.median(sentinels.values()), 3) if sentinels else None
     )
-    dbgen_set = ("tpch_q1", "tpch_q3", "tpch_q9", "tpch_q21")
-    by_name = {s.name: s for s in specs}
+    env["loadavg_end"] = _loadavg()
 
-    def _timed_block(d: str, names: tuple[str, ...]) -> dict[str, float]:
-        res: dict[str, float] = {}
-        for name in names:
-            spec = by_name.get(name)
-            if spec is None:
-                continue
-            # One untimed warm-up per query (r14 ADVICE): the blocks now run
-            # FIRST in a cold session, so without this the two timed samples
-            # include first-run JIT/codegen cost that the sf0.1 side of
-            # x10_ratio (warmed by the main sweep's warm-up pass) never pays.
-            try:
-                _consume(spec.fn(spark, d))
-            except Exception:
-                pass
-            samples = []
-            for _ in range(2):
-                t0 = time.perf_counter()
-                _consume(spec.fn(spark, d))
-                samples.append(time.perf_counter() - t0)
-            res[name] = round(statistics.median(samples), 3)
-        return res
-
-    try:
-        _sent_base0 = json.load(open(BENCHBASE)).get("sentinel_sec")
-    except Exception:
-        _sent_base0 = None
-
-    # Mid-sweep contamination threshold (r14 verdict task 1): three driver
-    # sweeps in a row landed on a loaded machine, and the single start-of-
-    # sweep sentinel read FAST while the sweep itself was being squeezed
-    # (BENCH_PROBES final_bench_attempt_r14). Everything timed now carries
-    # sentinel stamps taken DURING the measurement; anything whose local
-    # stamp drifts past this factor of the recorded regime is re-run after
-    # a settle, and a run that never lands calm is flagged `contaminated`.
-    DRIFT = 1.3
-
-    def _guarded_block(d: str, names: tuple[str, ...]) -> dict:
-        """Run a scale block with the mid-sweep guard: stamp the regime
-        before (``env``) and after (``sentinel_after``) the timed block.
-
-        A drifted post-stamp is AMBIGUOUS: a heavy block leaves its own
-        GC/allocator tail that reads exactly like ambient load (the first
-        two r15 calm closures flagged the sf1 block on an IDLE machine —
-        post-stamp 0.78-0.90 every run, block ratios at their best ever).
-        Disambiguate by settling and re-stamping: the block's own tail
-        drains in seconds, co-tenant load does not. Only a STILL-drifted
-        settled stamp means real mid-block load — then re-run once and
-        keep the pass with the calmer settled stamp.
-
-        LIMIT (r15 ADVICE): both the block stamps and the sweep's
-        per-query stamps are post-hoc — they bound contamination that
-        PERSISTS past the measurement. A co-tenant burst confined to the
-        measurement window (ending before the post-stamp) is
-        indistinguishable from the block's own GC tail and ships
-        unflagged; `contaminated: false` is strong but not absolute."""
-        best: dict | None = None
-        for attempt in range(2):
-            env = _mini_env(spark)
-            qs = _timed_block(d, names)
-            post = _sentinel_sec(spark, runs=1)
-            cand = {"env": env, "queries": qs, "sentinel_after": post}
-            if _sent_base0 is not None and post > DRIFT * _sent_base0:
-                _settle(spark, _sent_base0, limit_sec=60.0)
-                settled = _sentinel_sec(spark, runs=1)
-                cand["sentinel_after_settled"] = settled
-                post = min(post, settled)
-            cand["sentinel_verdict"] = post
-            if best is None or post < best["sentinel_verdict"]:
-                best = cand
-            if _sent_base0 is None or post <= DRIFT * _sent_base0:
-                break
-            print(
-                f"bench: block settled post-sentinel {post:.3f} > {DRIFT}x "
-                f"regime {_sent_base0:.3f} — real mid-block load, re-running",
-                file=sys.stderr,
-            )
-        best["block_contaminated"] = bool(
-            _sent_base0 and best["sentinel_verdict"] > DRIFT * _sent_base0
-        )
-        return best
-
+    blocks: dict[str, dict] = {}
     if os.environ.get("SPARK_GRAFT_SF1", "1") != "0" and abs(sf - 0.1) < 1e-9:
-        try:
-            from flink_1_6_0_spark.sources.scale_synth import sf1_dir
+        from flink_1_6_0_spark.sources.scale_synth import sf1_dir
+        from flink_1_6_0_spark.sources.tpch_dbgen import tpch_dir
 
-            t0 = time.perf_counter()
-            d1 = sf1_dir(spark)
-            synth_sec = round(time.perf_counter() - t0, 1)
-            _settle(spark, _sent_base0)
-            sf1_block = {
-                "sf": 1.0,
-                "note": "10x key-shifted scale-up of sf0.1 (scale_synth.py)",
-                "synth_or_cache_sec": synth_sec,
-                "runs_per_query": 2,
-                **_guarded_block(d1, sf1_set),
-            }
-        except Exception as exc:
-            print(f"bench: sf1 sweep skipped: {exc}", file=sys.stderr)
-        try:
-            from flink_1_6_0_spark.sources.tpch_dbgen import tpch_dir
-
-            t0 = time.perf_counter()
-            dd = tpch_dir(1.0)
-            gen_sec = round(time.perf_counter() - t0, 1)
-            _settle(spark, _sent_base0)
-            dbgen_block = {
-                "sf": 1.0,
-                "note": "REAL TPC-H sf1 (DuckDB dbgen, sources/tpch_dbgen.py)",
-                "gen_or_cache_sec": gen_sec,
-                "runs_per_query": 2,
-                **_guarded_block(dd, dbgen_set),
-            }
-        except Exception as exc:
-            print(f"bench: sf1 dbgen sweep skipped: {exc}", file=sys.stderr)
-
-    _sent_base = _sent_base0  # one BENCHBASE load serves blocks and sweep
-
-    def _settled_stamp(raw: float) -> float:
-        """Disambiguate a drifted 1-run stamp from the measured work's own
-        GC/allocator tail — the same rule _guarded_block applies to the
-        scale blocks (a tail drains under a brief settle; co-tenant load
-        does not). Returns the calmer of the raw and settled readings."""
-        if _sent_base is None or raw <= DRIFT * _sent_base:
-            return raw
-        _settle(spark, _sent_base, limit_sec=45.0)
-        return min(raw, _sentinel_sec(spark, runs=1))
-
-    def _run_one(spec) -> float:
-        samples: list[float] = []
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            _consume(spec.fn(spark, sf_dir))
-            samples.append(time.perf_counter() - t0)
-        return round(statistics.median(samples), 3)
-
-    def sweep() -> tuple[dict, dict[str, float], dict]:
-        """One full timed pass with the PER-QUERY contamination guard (r14
-        verdict task 1): after each query's timed runs a 1-run sentinel
-        stamps the regime that query actually ran under — the start-of-sweep
-        sentinel alone can read fast while load arrives mid-sweep (the
-        final_bench_attempt_r14 signature: throughput collapsed to 7.2k
-        rows/s yet the opening sentinel read 0.48 s). Queries whose local
-        stamp drifts past DRIFT x the recorded regime are re-run after a
-        settle; a re-run timing replaces the original only when its own
-        stamp is CALMER, so every shipped number carries the provenance of
-        the calmest regime it was actually measured under. Queries still
-        drifted after re-runs land in ``guard["contaminated_queries"]``."""
-        env = _env_block(spark)
-        # sentinel FIRST (one throwaway run excludes its own JIT cost): it
-        # stamps the machine-speed regime this sweep ran under
-        _sentinel_sec(spark, runs=1)
-        env["sentinel_sec"] = _sentinel_sec(spark)
-        timings: dict[str, float] = {}
-        stamps: dict[str, float] = {}
-        for spec in specs:
-            try:
-                timings[spec.name] = _run_one(spec)
-            except Exception as exc:  # a failing query must not sink the bench
-                print(f"bench: {spec.name} FAILED: {exc}", file=sys.stderr)
-                timings[spec.name] = -1.0
-            if _sent_base is not None:
-                stamps[spec.name] = _settled_stamp(_sentinel_sec(spark, runs=1))
-        guard: dict = {"query_sentinels": stamps}
-        if _sent_base is not None:
-            drifted = sorted(
-                q for q, s in stamps.items()
-                if s > DRIFT * _sent_base and timings.get(q, -1.0) >= 0
-            )
-            guard["drifted_queries"] = drifted
-            if drifted:
-                print(
-                    f"bench: {len(drifted)} queries measured under a drifted "
-                    f"regime — re-running after settle: {drifted}",
-                    file=sys.stderr,
-                )
-            reruns: dict[str, list[float]] = {}
-            # Re-run budget: on a PERSISTENTLY loaded machine every query
-            # drifts, and an unbounded repair pass (settle up to 180 s per
-            # re-run) could stretch the sweep into hours. Cap the whole
-            # pass; whatever stays drifted when the budget runs out ships
-            # under the contaminated flag — which is the honest outcome on
-            # a machine like that anyway.
-            rerun_deadline = time.monotonic() + float(
-                os.environ.get("SPARK_GRAFT_RERUN_BUDGET_S", "600")
-            )
-            for q in drifted:
-                spec = next(s for s in specs if s.name == q)
-                for _ in range(2):
-                    if time.monotonic() > rerun_deadline:
-                        print("bench: re-run budget exhausted", file=sys.stderr)
-                        break
-                    _settle(spark, _sent_base, limit_sec=45.0)
-                    try:
-                        t = _run_one(spec)
-                    except Exception as exc:
-                        print(f"bench: rerun {q} FAILED: {exc}", file=sys.stderr)
-                        break
-                    s_local = _settled_stamp(_sentinel_sec(spark, runs=1))
-                    reruns.setdefault(q, []).append(s_local)
-                    if s_local < stamps[q]:
-                        timings[q] = t
-                        stamps[q] = s_local
-                    if s_local <= DRIFT * _sent_base:
-                        break
-                if time.monotonic() > rerun_deadline:
-                    break
-            if reruns:
-                guard["rerun_sentinels"] = reruns
-            guard["contaminated_queries"] = sorted(
-                q for q, s in stamps.items()
-                if s > DRIFT * _sent_base and timings.get(q, -1.0) >= 0
-            )
-        return env, timings, guard
-
-    # Min-sentinel retry (round-10 verdict task 5): a co-tenant noise burst
-    # during THE sweep inflates every number uniformly; when the sweep's own
-    # sentinel reads >1.15x the baseline regime, re-run the whole sweep (up
-    # to SPARK_GRAFT_BENCH_ATTEMPTS, default 3) and keep the attempt with
-    # the smallest sentinel — the calmest environment actually observed.
-    # The per-query guard inside sweep() (r15) repairs MID-sweep bursts this
-    # whole-sweep retry can't see: its retry condition samples the opening
-    # sentinel only, which reads calm when load arrives later.
-    max_attempts = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_ATTEMPTS", "3")))
-    attempts: list[tuple[dict, dict[str, float], dict]] = []
-    for i in range(max_attempts):
-        _settle(spark, _sent_base)  # cheap when already calm
-        attempts.append(sweep())
-        s = attempts[-1][0].get("sentinel_sec")
-        if (
-            _sent_base is None
-            or s is None
-            or (s <= 1.15 * _sent_base and not attempts[-1][2].get("contaminated_queries"))
+        for key, make_dir, names, note, prep_key in (
+            ("sf1", lambda: sf1_dir(spark), SF1_SET,
+             "10x key-shifted scale-up of sf0.1 (scale_synth.py)", "synth_or_cache_sec"),
+            ("sf1_dbgen", lambda: tpch_dir(1.0), DBGEN_SET,
+             "REAL TPC-H sf1 (DuckDB dbgen, sources/tpch_dbgen.py)", "gen_or_cache_sec"),
         ):
-            break
-        print(
-            f"bench: attempt {i + 1} sentinel {s:.3f} (>1.15x baseline "
-            f"{_sent_base:.3f}) or unrepaired drifted queries — retrying",
-            file=sys.stderr,
-        )
+            unit = f"{key}_block"
+            if not fits(unit):
+                continue
+            try:
+                t0 = time.perf_counter()
+                d = make_dir()
+                blk = {
+                    "sf": 1.0, "note": note,
+                    prep_key: round(time.perf_counter() - t0, 1),
+                    "runs_per_query": 2, "env": _env_block(spark),
+                    "queries": {}, "query_sentinels": {},
+                }
+                for name in names:
+                    if name in by_name and fits(unit):
+                        _warm(spark, by_name[name], d)  # first read of the sf1 files
+                        blk["queries"][name], blk["query_sentinels"][name] = _time_query(
+                            spark, by_name[name], d, 2
+                        )
+                sents = list(blk["query_sentinels"].values())
+                if sents:
+                    blk["env"]["sentinel_sec"] = round(statistics.median(sents), 3)
+                    blk["sentinel_after"] = sents[-1]
+                    blocks[key] = blk
+            except Exception as exc:
+                print(f"bench: {key} block skipped: {exc}", file=sys.stderr)
 
-    def _attempt_rank(a: tuple[dict, dict[str, float], dict]) -> tuple:
-        # fewest unrepaired-contaminated queries first, then calmest sentinel
-        return (len(a[2].get("contaminated_queries", ())), a[0].get("sentinel_sec") or 1e9)
-
-    env, timings, guard = min(attempts, key=_attempt_rank)
-
-    total = round(sum(t for t in timings.values() if t >= 0), 3)
-
-    try:
-        env["loadavg_end"] = [round(x, 2) for x in os.getloadavg()]
-    except OSError:
-        pass
-
-    # End-to-end micro-batch throughput (BASELINE.md bench family 7): rows/s
-    # across a real >=3-micro-batch replay of the date-partitioned lake
-    # through the tumbling-window aggregate (queries/lake.py).
     throughput: dict | None = None
-    try:
-        from flink_1_6_0_spark.queries.lake import streaming_throughput
+    if fits("throughput"):
+        try:
+            from flink_1_6_0_spark.queries.lake import streaming_throughput
 
-        throughput = streaming_throughput(spark, sf_dir)
-    except Exception as exc:
-        print(f"bench: streaming throughput skipped: {exc}", file=sys.stderr)
+            throughput = streaming_throughput(spark, sf_dir)
+        except Exception as exc:
+            print(f"bench: streaming throughput skipped: {exc}", file=sys.stderr)
 
+    # failed queries (-1.0) have no timing to contaminate
+    measured = {q: s for q, s in sentinels.items() if timings[q] >= 0}
+    for key, blk in blocks.items():
+        ok = [s for q, s in blk["query_sentinels"].items() if blk["queries"][q] >= 0]
+        if ok:
+            blk["sentinel_verdict"] = measured[f"{key}_block"] = max(ok)
+    verdict = _verdict(measured, cut, base_sentinel)
     out = {
         "metric": "headline_queries_total_wall",
-        "value": total,
+        "value": round(sum(t for t in timings.values() if t >= 0), 3),
         "unit": "sec",
         "queries": timings,
         "sf": sf,
         "runs_per_query": runs,
         "env": env,
-        "bench_attempts": len(attempts),
-        "guard": guard,
+        "guard": {
+            "query_sentinels": sentinels,
+            "t_per_sentinel": {
+                q: round(t / sentinels[q], 3) for q, t in timings.items() if t >= 0
+            },
+            "contaminated_queries": [
+                q for q in verdict.get("contaminated_list", ()) if q in sentinels
+            ],
+        },
+        **verdict,
     }
-    # Top-level contamination verdict (r14 verdict task 1): TRUE iff any
-    # shipped number — main-sweep query or scale block — was last measured
-    # under a regime whose local sentinel stayed >DRIFT x baseline after
-    # re-runs. A BENCH_r{N}.json with guard_active=true and this flag false
-    # can be trusted without a judge re-run; with it set, the listed
-    # queries are the ones whose timings are environment-inflated.
-    #
-    # KNOWN LIMIT (r15 ADVICE): the stamps are post-hoc — they bound
-    # contamination that PERSISTS past each measurement (co-tenant load,
-    # sustained pressure). A burst confined exactly to one measurement
-    # window, ending before its post-stamp, reads identically to the
-    # block's own GC tail and ships unflagged. The flag is a strong
-    # negative signal, not an absolute guarantee.
-    #
-    # guard_active (r15 ADVICE): when BENCHBASE is missing the guard never
-    # stamped anything — contaminated=null then, so consumers can tell a
-    # verified-clean run from an UNCHECKED one.
-    _contam = list(guard.get("contaminated_queries", ()))
-    for _blk in (sf1_block, dbgen_block):
-        if _blk is not None and _blk.get("block_contaminated"):
-            _contam.append(
-                "sf1_block" if _blk is sf1_block else "sf1_dbgen_block"
-            )
-    out["guard_active"] = _sent_base is not None
-    out["contaminated"] = bool(_contam) if _sent_base is not None else None
-    if _contam:
-        out["contaminated_list"] = _contam
     if throughput is not None:
         out["throughput_rows_s"] = throughput["rows_per_sec"]
         out["stream_batches"] = throughput["batches"]
         out["stream_rows"] = throughput["rows"]
-
-    # Attach the scale blocks measured BEFORE the main sweep (see above).
-    # `x10_ratio` is t(sf1)/t(sf0.1) from the SAME process: /10 of it is the
+    # `x10_ratio` is t(sf1)/t(sf0.1) from the same process: /10 of it is the
     # per-decade exponent (1.0 = perfectly linear in data size).
-    if sf1_block is not None:
-        sf1_times = sf1_block["queries"]
-        sf1_block["x10_ratio"] = {
-            q: round(sf1_times[q] / timings[q], 2)
-            for q in sf1_times
-            if timings.get(q, -1) > 0
+    if "sf1" in blocks:
+        blocks["sf1"]["x10_ratio"] = {
+            q: round(t / timings[q], 2)
+            for q, t in blocks["sf1"]["queries"].items()
+            if t > 0 and timings.get(q, -1) > 0
         }
-        out["sf1"] = sf1_block
-    if dbgen_block is not None:
-        out["sf1_dbgen"] = dbgen_block
+    out.update(blocks)
 
-    # Matched-set ratio vs the recorded per-query baselines (BENCHBASE.json).
+    # Matched-set ratios vs the recorded per-query baselines (BENCHBASE.json).
     try:
-        base = json.load(open(BENCHBASE))
         baseline = dict(base.get("baseline", {}), **base.get("_added", {}))
         matched = [q for q, t in timings.items() if t >= 0 and q in baseline]
         if matched and abs(base.get("sf", -1) - sf) < 1e-9:
@@ -503,19 +340,15 @@ def main() -> None:
             ref = sum(baseline[q] for q in matched)
             out["vs_baseline_matched"] = round(cur / ref, 3)
             out["matched_queries"] = len(matched)
-            # sentinel-normalized ratio: divide out the machine-speed drift
-            # measured by the fixed-cost job; >1 here means PLAN-level change
-            sent_base = base.get("sentinel_sec")
-            if sent_base and env.get("sentinel_sec"):
-                drift = env["sentinel_sec"] / sent_base
+            # >1 after dividing out machine-speed drift means plan-level change
+            if base_sentinel and env["sentinel_sec"]:
+                drift = env["sentinel_sec"] / base_sentinel
                 out["env_drift"] = round(drift, 3)
                 out["vs_baseline_normalized"] = round(cur / ref / drift, 3)
-            out["per_query_ratio"] = {
-                q: round(timings[q] / baseline[q], 2) for q in matched
-            }
-            out["unmatched_new"] = sorted(q for q, t in timings.items() if t >= 0 and q not in baseline)
-        # sf1 sweep vs its own recorded baselines (first recording round
-        # seeds them; thereafter the 2x gate has a real sf1 evidence point)
+            out["per_query_ratio"] = {q: round(timings[q] / baseline[q], 2) for q in matched}
+            out["unmatched_new"] = sorted(
+                q for q, t in timings.items() if t >= 0 and q not in baseline
+            )
         for blk, bkey in (("sf1", "sf1_baseline"), ("sf1_dbgen", "sf1_dbgen_baseline")):
             bb = base.get(bkey, {})
             if blk in out and bb:
@@ -527,59 +360,23 @@ def main() -> None:
                     out[blk]["per_query_ratio"] = {
                         q: round(q1[q] / bb[q], 2) for q in m1
                     }
-                    # block-sentinel normalization (r14): divide out the
-                    # machine-speed drift between this block's env stamp and
-                    # the regime its baselines were recorded under
+                    # divide out the drift between this block's sentinels and the
+                    # regime its baselines were recorded under
                     sb = base.get(bkey.replace("_baseline", "_sentinel_sec"))
-                    snow = out[blk].get("env", {}).get("sentinel_sec")
+                    snow = out[blk]["env"]["sentinel_sec"]
                     if sb and snow:
                         out[blk]["block_env_drift"] = round(snow / sb, 3)
                         out[blk]["vs_baseline_normalized"] = round(r1 / (snow / sb), 3)
-    except Exception as exc:
+    except Exception as exc:  # a malformed BENCHBASE must not cost the line
         print(f"bench: baseline comparison skipped: {exc}", file=sys.stderr)
 
-    # Stdout hygiene (round-9 verdict item 3): the driver keeps only the TAIL
-    # of stdout (2000 chars observed) and parses it — the full document blew
-    # that budget, leaving BENCH_r*.json with `"parsed": null`. Ship the full
-    # record to BENCH_DETAIL.json and print ONE compact line that always fits.
-    detail_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json")
     try:
-        with open(detail_path, "w") as fh:
+        with open(DETAIL, "w") as fh:
             json.dump(out, fh, indent=1)
     except OSError as exc:
         print(f"bench: detail write failed: {exc}", file=sys.stderr)
 
-    compact = {
-        k: out[k]
-        for k in (
-            "metric", "value", "unit", "queries", "sf", "runs_per_query",
-            "vs_baseline_matched", "matched_queries", "env_drift",
-            "vs_baseline_normalized", "throughput_rows_s", "stream_batches",
-            "guard_active", "contaminated", "contaminated_list",
-        )
-        if k in out
-    }
-    compact["sentinel_sec"] = env.get("sentinel_sec")
-    for blk in ("sf1", "sf1_dbgen"):
-        if blk in out:
-            compact[blk] = {
-                k: out[blk][k]
-                for k in ("sf", "vs_baseline_matched")
-                if k in out[blk]
-            }
-    compact["detail"] = "BENCH_DETAIL.json"
-    line = json.dumps(compact, separators=(",", ":"))
-    if len(line) > 1900:  # still too big (query set grew): coarsen, then trim
-        compact["queries"] = {q: round(t, 2) for q, t in compact["queries"].items()}
-        line = json.dumps(compact, separators=(",", ":"))
-    while len(line) > 1900 and compact["queries"]:
-        # drop the fastest queries first — their timings matter least and the
-        # full set is in BENCH_DETAIL.json either way
-        drop = min(compact["queries"], key=lambda q: compact["queries"][q])
-        del compact["queries"][drop]
-        compact["queries_truncated"] = True
-        line = json.dumps(compact, separators=(",", ":"))
-    print(line)
+    print(_compact_line(out))
 
 
 if __name__ == "__main__":

@@ -1,22 +1,24 @@
-"""r17 optimization round: per-query isolation measurement harness.
+"""Per-query isolation measurement harness.
 
-Usage: python scripts/r17_measure.py [--plans-tag before|after] [query ...]
+Usage: python scripts/measure.py ROUND [--plans-tag before|after] [query ...]
+       (ROUND names the plans directory and the app, e.g. r18)
 Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
        SPARK_GRAFT_MEASURE_RUNS (default 3)
 
 For each named query (default: the bench=True headline set):
 - one untimed warm-up at sf0.001 (JIT/codegen compile),
-- N timed runs at SF_DIR with the noop sink (guide §1.4 — full plan, no
-  collect), median reported,
-- the formatted physical plan written to plans/r17/<name>_<tag>.txt when
+- N timed runs at SF_DIR with the noop sink (full plan, no collect),
+  median reported,
+- the formatted physical plan written to plans/ROUND/<name>_<tag>.txt when
   --plans-tag is given.
 
 Prints one JSON object {query: {"sec": median, "runs": [..]}} at the end.
-Jobs are labelled (guide §1.5) so a live UI / event log maps to queries.
+Jobs are labelled so a live UI / event log maps to queries.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import statistics
@@ -34,24 +36,27 @@ def _consume(df) -> None:
 
 
 def main() -> None:
-    args = sys.argv[1:]
-    tag = None
-    if args and args[0] == "--plans-tag":
-        tag = args[1]
-        args = args[2:]
+    ap = argparse.ArgumentParser(description="Per-query isolation timings.")
+    ap.add_argument("round", help="round tag: plans/<round>/ and the app name")
+    ap.add_argument(
+        "--plans-tag", help="write each plan to plans/<round>/<query>_<tag>.txt"
+    )
+    ap.add_argument("queries", nargs="*", help="default: the bench=True set")
+    args = ap.parse_args()
+    tag = args.plans_tag
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     runs = max(1, int(os.environ.get("SPARK_GRAFT_MEASURE_RUNS", "3")))
     warm_dir = "/root/testdata/sf0.001"
 
     specs = load_all()
-    names = args or [n for n, s in specs.items() if s.bench]
+    names = args.queries or [n for n, s in specs.items() if s.bench]
     plans_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r17"
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", args.round
     )
     os.makedirs(plans_dir, exist_ok=True)
 
-    spark = get_spark(app_name="r17-measure")
+    spark = get_spark(app_name=f"{args.round}-measure")
     out: dict[str, dict] = {}
     for name in names:
         spec = specs[name]
